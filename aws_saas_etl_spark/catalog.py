@@ -1,17 +1,29 @@
-"""Table registry over the driver's Parquet fixtures.
+"""Table catalog over the Parquet fixture tables.
 
 The reference keeps its metadata in Postgres and its data as loose CSV in
 S3 (reference app.py:34-39, etl_core.py:22-27); the engine's catalog is a
-directory of Parquet tables read lazily — schemas come from Parquet
-footers, so scans get column pruning + predicate pushdown for free.
+directory of Parquet tables, one ``<name>.parquet`` file or directory per
+table. Schemas come from Parquet footers, so scans get column pruning and
+predicate pushdown for free.
+
+Every fixture table is opened here. ``load_table`` builds a table's scan at
+most once per Spark application and serves later calls from a session
+cache keyed by (applicationId, absolute table path, listing signature);
+the listing signature is the relative name, size and ``mtime_ns`` of every
+file under the path, so a table rewritten in place gets a new scan instead
+of a stale file index. The cache is an untraced ``memo.MemoDict``:
+``session.clear_session_memos`` empties it, and a cold pass pays one scan
+per table it touches.
 """
 
 from __future__ import annotations
 
 import os
-from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from aws_saas_etl_spark.memo import MemoDict
 
 TABLES = (
     "region",
@@ -37,63 +49,76 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_SCANS = MemoDict("table_scans", traced=False)
+_ROW_COUNTS = MemoDict("table_row_counts", traced=False)
+
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _listing_signature(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of every file under ``path``."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _scan_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    path = os.path.abspath(table_path(sf_dir, name))
+    return (spark.sparkContext.applicationId, path, _listing_signature(path))
+
+
+def _open_scan(spark: SparkSession, path: str, name: str) -> DataFrame:
+    scan = spark.read.parquet(path)
+    # A TIMESTAMP(NANOS) ``events.ts`` reads as raw int64 nanoseconds
+    # (``nanosAsLong``, set by session.get_spark); exact integer division
+    # converts it to microsecond TIMESTAMP_NTZ, truncating like DuckDB's
+    # ns→µs conversion, so both engines see identical values.
+    if name == "events" and dict(scan.dtypes).get("ts") == "bigint":
+        scan = scan.withColumn(
+            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
+        )
+    return scan
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy Parquet scan of one fixture table.
+    """The scan of one fixture table, built once per Spark application.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects. We read it as raw int64 nanoseconds
-    (``nanosAsLong``) and convert to microsecond TIMESTAMP_NTZ with exact
-    integer division (``div`` truncates like DuckDB's ns→µs conversion), so
-    both engines see identical values.
+    Calls with the same applicationId, absolute table path and file listing
+    return the same ``DataFrame``; a rewritten table (any file added,
+    removed, resized or touched) gets a fresh scan. ``events.ts`` is
+    already TIMESTAMP_NTZ in the returned scan. The cache is emptied by
+    ``session.clear_session_memos``.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-
-        raw = spark.read.parquet(table_path(sf_dir, name))
-        if dict(raw.dtypes).get("ts") in ("bigint", "long"):
-            raw = raw.withColumn(
-                "ts",
-                F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"),
-            )
-        return raw
-    return spark.read.parquet(table_path(sf_dir, name))
-
-
-#: Session-scoped table row counts (r13 optimization). Every ANN/dedup
-#: sizing rule (ivf_cells_for, lsh_bits_for, semdedup_k, er_block_suffix_len)
-#: needs |table| — and the fleet recomputed it per query construction, on
-#: the REPARTITIONED frame (ensure_parallelism → count pays the shuffle:
-#: 2 stages of pure sizing overhead per arm; the ladder staleness report's
-#: 11 arms paid it 11×). A row count is a catalog statistic (parquet
-#: footers carry it; every warehouse serves it from table stats), so it is
-#: computed once per (applicationId, table) on the RAW scan — Spark's
-#: count over an unmodified parquet scan reads footer metadata, no data
-#: pass — and cached. traced=False: cleared by clear_session_memos (cold
-#: reps re-pay the one metadata job) but not a stored-artifact regime the
-#: bench cold/warm table needs rows for.
-from aws_saas_etl_spark.memo import MemoDict
-
-_ROW_COUNTS = MemoDict("table_row_counts", traced=False)
+    key = _scan_key(spark, sf_dir, name)
+    scan = _SCANS.get(key)
+    if scan is None:
+        scan = _SCANS[key] = _open_scan(spark, table_path(sf_dir, name), name)
+    return scan
 
 
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """|table| as a catalog statistic: counted once per session on the raw
-    parquet scan (footer metadata — no shuffle, no repartition), then
-    served from the session cache. Use for SIZING decisions only; the
-    value is identical to counting any row-preserving derivation of the
-    scan, so swapping a ``df.count()`` sizing probe for this changes no
-    query result."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
+    """|table|, counted once per scan-cache key on the cached scan.
+
+    The count over an unmodified Parquet scan reads footer metadata only (no
+    shuffle, no repartition). It shares ``load_table``'s key, so a rewritten
+    table gets a fresh count, and ``session.clear_session_memos`` clears it.
+    Use it for SIZING decisions: it equals the count of any row-preserving
+    derivation of the scan, so replacing a ``df.count()`` sizing probe with
+    it changes no query result.
+    """
+    key = _scan_key(spark, sf_dir, name)
     got = _ROW_COUNTS.get(key)
     if got is None:
-        got = load_table(spark, sf_dir, name).count()
-        _ROW_COUNTS[key] = got
+        got = _ROW_COUNTS[key] = load_table(spark, sf_dir, name).count()
     return got
 
 
@@ -122,14 +147,30 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df.repartition(target)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
-    """All fixture tables as attributes: ``t = load_tables(...); t.lineitem``."""
-    return SimpleNamespace(
-        **{name: load_table(spark, sf_dir, name) for name in TABLES}
-    )
+class _Tables:
+    """Fixture tables as attributes, each opened on first access."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
+        self._spark = spark
+        self._sf_dir = sf_dir
+
+    def __getattr__(self, name: str) -> DataFrame:
+        if name not in TABLES:
+            raise AttributeError(name)
+        scan = load_table(self._spark, self._sf_dir, name)
+        setattr(self, name, scan)
+        return scan
+
+
+def load_tables(spark: SparkSession, sf_dir: str) -> _Tables:
+    """All fixture tables as lazy attributes: ``t = load_tables(...);
+    t.orders`` opens only ``orders`` (through ``load_table``), once per
+    namespace."""
+    return _Tables(spark, sf_dir)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql``."""
+    """Register every fixture table's cached scan as a temp view for
+    ``spark.sql``."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

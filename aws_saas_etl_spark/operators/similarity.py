@@ -12,6 +12,8 @@ JVM, no Python per row.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -1120,7 +1122,7 @@ _TRUTH_CACHE = MemoDict("audit_truth_topk")
 
 
 def _truth_topk_cached(spark, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, TOP_K)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), TOP_K)
     got = _TRUTH_CACHE.get(key)
     if got is None:
         got = (

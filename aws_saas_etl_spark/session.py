@@ -55,6 +55,9 @@ def get_spark(
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         # 128 MB input splits — the right granularity for wide clusters.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # A parquet TIMESTAMP(NANOS) column reads as int64 nanoseconds, which
+        # catalog.load_table converts to TIMESTAMP_NTZ (events.ts).
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -64,16 +67,16 @@ def get_spark(
 
 
 def clear_session_memos() -> None:
-    """Purge every session-scoped DataFrame memo (content clusters,
-    shingle table, stored base assignment, fitted IVF centroids, manifest
-    artifacts). The memos model STORED artifacts — in production each is
-    read back from object storage, so computing one per session is the
-    faithful serving shape — but cold-path measurement (scale_probe,
-    plan_audit's cold mode) must clear them or it times/plans only the
-    cheap consumer stage. The set of memos is not hand-curated: every
-    cache is a self-registering ``memo.MemoDict`` (importing the operator
-    modules registers them), so a new stored artifact is covered the
-    moment it exists."""
+    """Purge every session-scoped memo (table scans and row counts,
+    content clusters, shingle table, stored base assignment, fitted IVF
+    centroids, manifest artifacts). The memos model STORED artifacts — in
+    production each is read back from object storage, so computing one per
+    session is the faithful serving shape — but cold-path measurement
+    (scale_probe, plan_audit's cold mode) must clear them or it times/plans
+    only the cheap consumer stage. The set of memos is not hand-curated:
+    every cache is a self-registering ``memo.MemoDict`` (importing the
+    operator modules registers them), so a new stored artifact is covered
+    the moment it exists."""
     from aws_saas_etl_spark import memo
     from aws_saas_etl_spark.operators import curation, dedup, similarity  # noqa: F401
 

@@ -44,6 +44,11 @@ def pytest_addoption(parser):
 
 
 def pytest_configure(config):
+    # The option and the environment variable are one switch: module-level
+    # budgets (resolved at import, before any config reaches them) call
+    # run_slow_enabled() and read the variable.
+    if config.getoption("--runslow"):
+        os.environ["SPARK_GRAFT_RUN_SLOW"] = "1"
     config.addinivalue_line(
         "markers",
         "slow: long-running opt-in suite (enable with --runslow or SPARK_GRAFT_RUN_SLOW=1)",

@@ -62,9 +62,12 @@ SMOKE_QUERIES = [
     "customer_order_running_totals",
     "revenue_rollup",
     "segment_overlap",
+    "nation_trade_volume",
+    "orders_monthly_spine",
     # events
     "events_session_stats",
     "events_resample_locf",
+    "events_pointintime_join",
     # dedup ladder + audits
     "dedup_exact",
     "minhash_lsh_pairs",

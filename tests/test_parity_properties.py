@@ -26,6 +26,7 @@ from aws_saas_etl_spark.functions.num import (
     dsum_rounded,
     dsum_sql,
 )
+from tests.conftest import run_slow_enabled
 
 # money-scale doubles + adversarial exact .xx5 boundaries
 _money = st.one_of(
@@ -47,14 +48,8 @@ _money = st.one_of(
 # the final tree). Generation stays derandomized in both regimes, and the
 # fast budget's examples are a PREFIX of the slow budget's (same seed), so
 # the default run never explores inputs the full run doesn't.
-import os as _os
-
-_FULL_BUDGET = bool(
-    _os.environ.get("SPARK_GRAFT_RUN_SLOW")
-) or "--runslow" in _os.sys.argv
-
 _SETTINGS = dict(
-    max_examples=20 if _FULL_BUDGET else 3,
+    max_examples=20 if run_slow_enabled() else 3,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
     # Deterministic generation: the same examples in every run, on every

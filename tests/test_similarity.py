@@ -1202,3 +1202,21 @@ def test_sampled_recall_report_equals_full_restricted_queries(spark):
         expected = {q: t for q, t in full.items() if bucket(q) < pct}
         assert sampled == expected, pct
         assert 0 < len(sampled) < len(full), pct
+
+
+def test_truth_topk_cache_key_is_canonical_path(spark):
+    """``sf_dir`` with and without a trailing slash is one cache entry."""
+    import os
+
+    from aws_saas_etl_spark.operators.similarity import (
+        _TRUTH_CACHE,
+        TOP_K,
+        _truth_topk_cached,
+    )
+
+    first = _truth_topk_cached(spark, SF_SMOKE)
+    assert _truth_topk_cached(spark, SF_SMOKE + "/") is first
+    ours = (spark.sparkContext.applicationId, os.path.abspath(SF_SMOKE))
+    assert [k for k in _TRUTH_CACHE if (k[0], os.path.abspath(k[1])) == ours] == [
+        (*ours, TOP_K)
+    ]
