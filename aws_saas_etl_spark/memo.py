@@ -16,6 +16,7 @@ the hand-curated six missed ``ann_index_staleness_report`` and its
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Any
 
 _REGISTRY: list["MemoDict"] = []
@@ -37,6 +38,9 @@ _TRACE: list[str] | None = None
 # of best-of-2 rep 2 is visible in the bench line without polluting the
 # stored-artifact cold/warm table.
 _TRACE_SIZING: list[str] | None = None
+
+# Miss marker for ``MemoDict.get_or_build``: a stored ``None`` is a hit.
+_MISS = object()
 
 
 class Touches(list):
@@ -86,6 +90,15 @@ class MemoDict(dict):
         self._trace()
         super().__setitem__(key, value)
 
+    def get_or_build(self, key: Any, build: Callable[[], Any]) -> Any:
+        """``self[key]``, running ``build()`` only when the key is absent
+        (a built ``None`` is stored and served like any other value)."""
+        got = self.get(key, _MISS)
+        if got is _MISS:
+            got = build()
+            self[key] = got
+        return got
+
 
 def clear_all() -> None:
     """Purge every registered memo — the cold-path reset used by
@@ -113,11 +126,7 @@ def derived_scalar_cached(spark, tag: tuple, build):
     """Session-cache a bounded sizing SCALAR (an id cut, a doc count)
     keyed by (applicationId, *tag); ``build()`` runs once per session."""
     key = (spark.sparkContext.applicationId, *tag)
-    got = _DERIVED_CUT_CACHE.get(key)
-    if got is None:
-        got = build()
-        _DERIVED_CUT_CACHE[key] = got
-    return got
+    return _DERIVED_CUT_CACHE.get_or_build(key, build)
 
 
 class track:

@@ -36,6 +36,7 @@ from aws_saas_etl_spark.catalog import (
 )
 from aws_saas_etl_spark.functions import num as N
 from aws_saas_etl_spark.functions import text as T
+from aws_saas_etl_spark.sources.io import compact_parquet
 
 # Deterministic-shuffle parameters: the salt versions the permutation (a
 # new salt = a fresh epoch order); 16 shards keeps the fixture demo
@@ -1609,7 +1610,6 @@ def manifest_store_compaction(spark, sf_dir: str) -> DataFrame:
     import os
 
     from aws_saas_etl_spark.sources.custom import proc_dir
-    from aws_saas_etl_spark.sources.io import compact_parquet
 
     repaired = training_manifest_deletion_repair(spark, sf_dir)
     src = proc_dir("manifest_churned", os.path.abspath(sf_dir))
@@ -1683,7 +1683,6 @@ def manifest_stream_compaction_handoff(spark, sf_dir: str) -> DataFrame:
     import os
 
     from aws_saas_etl_spark.sources.custom import proc_dir
-    from aws_saas_etl_spark.sources.io import compact_parquet
     from aws_saas_etl_spark.streaming.runners import _stream_manifest_delta_rows
 
     apath = os.path.abspath(sf_dir)

@@ -1039,15 +1039,12 @@ def delta_doc_cut(spark, sf_dir: str) -> float:
     import os
 
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    got = _DELTA_CUT_CACHE.get(key)
-    if got is None:
-        got = (
-            _shingle_table(spark, sf_dir)
-            .agg(F.percentile("doc_id", 1.0 - DELTA_DOC_FRACTION).alias("cut"))
-            .first()["cut"]
-        )
-        _DELTA_CUT_CACHE[key] = got
-    return got
+    return _DELTA_CUT_CACHE.get_or_build(
+        key,
+        lambda: _shingle_table(spark, sf_dir)
+        .agg(F.percentile("doc_id", 1.0 - DELTA_DOC_FRACTION).alias("cut"))
+        .first()["cut"],
+    )
 
 
 def _merge_delta_into_labels(

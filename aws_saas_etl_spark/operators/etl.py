@@ -25,6 +25,7 @@ from aws_saas_etl_spark.functions.sentiment import (
     sentiment_expr,
     sentiment_pandas_udf,
 )
+from aws_saas_etl_spark.sources.io import read_csv, write_csv
 
 
 def require_column(df: DataFrame, column: str) -> DataFrame:
@@ -128,8 +129,6 @@ def csv_roundtrip_stats(spark, sf_dir: str) -> DataFrame:
     import hashlib
     import os
     import tempfile
-
-    from aws_saas_etl_spark.sources.io import read_csv, write_csv
 
     cust = load_tables(spark, sf_dir).customer
     # one deterministic staging dir per (sf_dir, process), overwritten on

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from aws_saas_etl_spark.catalog import ensure_parallelism, load_tables
 from aws_saas_etl_spark.functions.num import davg_rounded, dround, dsum_rounded
+from aws_saas_etl_spark.sources.io import write_partitioned
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -729,7 +730,6 @@ def events_partition_pruned_rollup(spark, sf_dir: str) -> DataFrame:
     import os
 
     from aws_saas_etl_spark.sources.custom import proc_dir
-    from aws_saas_etl_spark.sources.io import write_partitioned
 
     ev = load_tables(spark, sf_dir).events.na.drop(subset=["ts"])
     path = proc_dir("events_by_date", sf_dir)

@@ -433,8 +433,16 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
 _IVF_CACHE = MemoDict("ivf_centroids")
 
 
+def _canonical_key(cache_key: str) -> str:
+    """``cache_key`` with its path part made absolute: ``sf_dir`` spellings
+    of one directory (relative, trailing slash) share one entry, and a
+    ``::base``-style suffix is kept as given."""
+    path, sep, tag = cache_key.partition("::")
+    return os.path.abspath(path) + sep + tag
+
+
 def _ivf_centroids_cached(spark, sf_dir, emb, n_cells, iters=IVF_ITERS) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, iters)
+    key = (spark.sparkContext.applicationId, _canonical_key(sf_dir), n_cells, iters)
     got = _IVF_CACHE.get(key)
     if got is None:
         got = ivf_fit_cells(emb, n_cells, iters)
@@ -464,7 +472,7 @@ def _corpus_cells_cached(
     spark, cache_key: str, emb: DataFrame, centroids: DataFrame, n_cells: int,
     iters: int = IVF_ITERS,
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, cache_key, n_cells, iters)
+    key = (spark.sparkContext.applicationId, _canonical_key(cache_key), n_cells, iters)
     got = _ASSIGN_CACHE.get(key)
     if got is None:
         got = _assign_cells(
@@ -2215,7 +2223,9 @@ def _pq_fit_from_subs(subs: DataFrame) -> DataFrame:
 
 
 def _pq_codebooks_cached(spark, sf_dir: str, emb: DataFrame) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
+    key = (
+        spark.sparkContext.applicationId, _canonical_key(sf_dir), PQ_M, PQ_K, PQ_ITERS,
+    )
     got = _PQ_CACHE.get(key)
     if got is None:
         got = pq_fit_codebooks(emb)
@@ -2242,7 +2252,9 @@ _PQ_CODES_CACHE = MemoDict("pq_codes")
 
 
 def _pq_codes_cached(spark, cache_key: str, emb: DataFrame, cb: DataFrame) -> DataFrame:
-    key = (spark.sparkContext.applicationId, cache_key, PQ_M, PQ_K, PQ_ITERS)
+    key = (
+        spark.sparkContext.applicationId, _canonical_key(cache_key), PQ_M, PQ_K, PQ_ITERS,
+    )
     got = _PQ_CODES_CACHE.get(key)
     if got is None:
         got = (
@@ -2688,7 +2700,8 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
         )
     )
     rsubs = _subspace_slices(resid, "r", extra=("cell",))
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS, "res")
+    corpus = os.path.abspath(sf_dir)
+    key = (spark.sparkContext.applicationId, corpus, PQ_M, PQ_K, PQ_ITERS, "res")
     cb = _PQ_RES_CACHE.get(key)
     if cb is None:
         cb = _pq_fit_from_subs(rsubs.select("vec_id", "m", "sub"))
@@ -2697,7 +2710,7 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     # table (r14): per-(vec, m) argmin against the residual codebook +
     # the cell tag — what a residual-PQ store persists per vector
     ckey = (
-        spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS, "rescodes",
+        spark.sparkContext.applicationId, corpus, PQ_M, PQ_K, PQ_ITERS, "rescodes",
     )
     codes = _PQ_RES_CACHE.get(ckey)
     if codes is None:
@@ -3000,20 +3013,19 @@ def _append_cut(spark, sf_dir: str, emb: DataFrame) -> int:
     session (see ``_APPEND_CUT_CACHE``)."""
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    got = _APPEND_CUT_CACHE.get(key)
-    if got is None:
+    def build() -> int:
         n = table_row_count(spark, sf_dir, "embeddings")
         n_base = n - n // 10
-        got = (
+        return (
             emb.select("vec_id")
             .orderBy("vec_id")
             .limit(n_base)
             .agg(F.max("vec_id"))
             .first()[0]
         )
-        _APPEND_CUT_CACHE[key] = got
-    return got
+
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    return _APPEND_CUT_CACHE.get_or_build(key, build)
 
 
 def ann_sq8_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:

@@ -8,10 +8,13 @@ values after sorting columns by name (``__spark_entry__.py`` contract).
 
 Genuinely non-SQL-expressible operators (mergeable sketches,
 eigenvectors, iterative Lloyd refinement) register with ``oracle=None``
-→ the driver records a rows-only check; since r5 every STREAMING query
-carries a deterministic-drain oracle, and since r6 the whole LSH family
-(MinHash pairs/clusters, SimHash, hyperplane ANN) and the Arrow feature
-kernel are hash-checked via engine-neutral md5-derived hashing.
+→ the driver records a rows-only check. Every STREAMING query carries a
+deterministic-drain oracle, and the LSH family (MinHash pairs/clusters,
+SimHash, hyperplane ANN) and the Arrow feature kernel are hash-checked
+via engine-neutral md5-derived hashing.
+
+Importing this module only registers queries: ``queries()`` and
+``oracle_sql()`` return them in registration (source) order.
 """
 
 from __future__ import annotations
@@ -1517,247 +1520,3 @@ register(
     similarity.ann_ladder_staleness_report_sampled25,
     oracles.ANN_LADDER_STALENESS_SAMPLED25_SQL,
 )
-
-
-# --------------------------------------------------------------------------
-# Driver-window rotation (self-maintaining).
-#
-# The driver's per-round correctness gate checks the FIRST 50 names in
-# queries() iteration order (each CORRECTNESS_r*.json is exactly that
-# prefix of the round's registration order). With 100+ registered queries,
-# registration order alone would leave later operators permanently
-# invisible to the hard gate, so queries() is reordered at import time
-# from the accumulated CORRECTNESS files:
-#
-#   1. previously-FAILED queries (a real error recorded) — regressions
-#      whose fix must be proven first;
-#   2. checked-but-MODIFIED queries (source fingerprint drifted since the
-#      stamped proven fingerprint — see PROVEN_FINGERPRINTS.json), oracle-
-#      backed before rows-only: a rewrite invalidates the old green row;
-#   3. oracle-backed queries the driver has never checked;
-#   4. rows-only queries never checked (weaker evidence, so they follow
-#      the oracle-backed ones);
-#   5. everything already checked (green or ran), in registration order.
-#
-# Each round the newly-checked prefix moves to the back automatically —
-# no per-round list to curate. Ties keep registration order, so the
-# window is deterministic for a given set of CORRECTNESS files.
-# --------------------------------------------------------------------------
-
-
-def _transitive_sources(fn) -> list[str]:
-    """Source text of *fn* plus every package-internal callable it reaches.
-
-    Walks the code object's ``co_names`` (and nested code objects, so
-    closures and comprehensions count), resolves each name in the
-    function's globals, and recurses into functions/classes defined inside
-    ``aws_saas_etl_spark``. Module references are followed one attribute
-    hop (``dedup._prefix_candidates`` style calls list both names in
-    ``co_names``). The result is sorted + de-duplicated, so the fingerprint
-    is stable under reordering of the walk.
-    """
-    import inspect
-    import types
-
-    pkg = __name__.split(".")[0]
-    seen: set[int] = set()
-    sources: dict[str, str] = {}
-
-    def in_pkg(obj) -> bool:
-        mod = getattr(obj, "__module__", None)
-        return isinstance(mod, str) and mod.split(".")[0] == pkg
-
-    def visit(obj) -> None:
-        if id(obj) in seen:
-            return
-        seen.add(id(obj))
-        target = inspect.unwrap(obj)
-        fn_obj = getattr(target, "__func__", target)
-        code = getattr(fn_obj, "__code__", None)
-        src = None
-        try:
-            key = f"{target.__module__}.{target.__qualname__}"
-            src = inspect.getsource(target)
-            sources.setdefault(key, src)
-        except (OSError, TypeError, AttributeError):
-            pass
-        if src is not None:
-            # Function-body imports (`from <pkg>.x import helper`) bind
-            # locals, not globals — resolve them from the source text.
-            import importlib
-            import re as _re
-
-            for m in _re.finditer(
-                rf"from\s+({pkg}[.\w]*)\s+import\s+([\w,\s]+)", src
-            ):
-                try:
-                    mod = importlib.import_module(m.group(1))
-                except ImportError:
-                    continue
-                for attr in m.group(2).replace(",", " ").split():
-                    val = getattr(mod, attr, None)
-                    if val is not None and callable(val) and in_pkg(val):
-                        visit(val)
-        if code is None:
-            return
-        globs = getattr(fn_obj, "__globals__", {})
-        names: set[str] = set()
-        stack = [code]
-        while stack:
-            c = stack.pop()
-            names.update(c.co_names)
-            names.update(c.co_freevars)
-            stack.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
-        # Closure cells carry helpers bound at definition time.
-        for cell in getattr(fn_obj, "__closure__", None) or ():
-            try:
-                val = cell.cell_contents
-            except ValueError:
-                continue
-            if callable(val) and in_pkg(val):
-                visit(val)
-        modules = []
-        for n in names:
-            val = globs.get(n)
-            if val is None:
-                continue
-            if isinstance(val, types.ModuleType) and getattr(
-                val, "__name__", ""
-            ).split(".")[0] == pkg:
-                modules.append(val)
-            elif callable(val) and in_pkg(val):
-                visit(val)
-        for mod in modules:
-            for n in names:
-                val = getattr(mod, n, None)
-                if val is not None and callable(val) and in_pkg(val):
-                    visit(val)
-
-    visit(fn)
-    return [sources[k] for k in sorted(sources)]
-
-
-def query_fingerprints() -> dict[str, str]:
-    """sha256 of each registered query's implementation + oracle SQL.
-
-    Used by the rotation below: a query whose fingerprint changed since the
-    round in which the driver last proved it green is rotated back into the
-    check window (tier between *failed* and *never checked*), so a rewrite
-    can't hide behind an old green row. The hash covers the registered
-    callable's source AND every package-internal helper it transitively
-    references (``_transitive_sources``) — so rewriting a shared helper
-    such as ``_prefix_candidates`` or ``connected_components`` invalidates
-    every proven stamp that depends on it, not just same-function edits.
-    """
-    import hashlib
-
-    out: dict[str, str] = {}
-    for name, e in _REGISTRY.items():
-        srcs = _transitive_sources(e.fn)
-        if not srcs:
-            srcs = [getattr(e.fn, "__qualname__", repr(e.fn))]
-        blob = "\n\x00\n".join(srcs) + "\n\x00\n" + (e.oracle or "")
-        out[name] = hashlib.sha256(blob.encode()).hexdigest()
-    return out
-
-
-def _proven_fingerprints() -> dict[str, str]:
-    """name → fingerprint recorded when the driver last checked it.
-
-    Maintained by ``tools/update_fingerprints.py`` (run at round start,
-    right after the driver commits ``CORRECTNESS_r{N}.json``; historical
-    rounds were stamped from the code at each round's closing commit).
-    Missing file or missing name ⇒ no modification claim can be made.
-    """
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "PROVEN_FINGERPRINTS.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except Exception:
-        return {}
-    return data if isinstance(data, dict) else {}
-
-
-def _correctness_status() -> tuple[set[str], set[str], dict[str, int]]:
-    """(checked, failed, last_round) accumulated over all prior rounds.
-
-    ``last_round[name]`` is the newest round whose CORRECTNESS file holds a
-    passing row for the query — the staleness key the rotation uses to
-    re-confirm old proofs once no unproven backlog remains.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    failed: set[str] = set()
-    last_round: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r0*(\d+)", os.path.basename(path))
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            err = row.get("err")
-            ok = err is None or err == "no_oracle"
-            hash_ok = row.get("hash_match")
-            if (err is None and hash_ok) or err == "no_oracle":
-                checked.add(name)
-                failed.discard(name)
-                last_round[name] = max(rnd, last_round.get(name, 0))
-            elif not ok or (err is None and hash_ok is False):
-                failed.add(name)
-    return checked, failed, last_round
-
-
-def _rotate_window() -> None:
-    checked, failed, last_round = _correctness_status()
-    proven_fp = _proven_fingerprints()
-    current_fp = query_fingerprints()
-    # "Proven" green is only trusted while the implementation is unchanged:
-    # a checked query whose source fingerprint drifted from the stamped one
-    # re-enters the window right behind the failures.
-    modified = {
-        n
-        for n in checked
-        if n in proven_fp and proven_fp[n] != current_fp.get(n, proven_fp[n])
-    }
-    names = list(_REGISTRY)
-    front = [n for n in names if n in failed]
-    front += [n for n in names if n not in failed and n in modified and _REGISTRY[n].oracle]
-    front += [
-        n for n in names if n not in failed and n in modified and not _REGISTRY[n].oracle
-    ]
-    front += [n for n in names if n not in failed and n not in checked and _REGISTRY[n].oracle]
-    front += [
-        n for n in names if n not in failed and n not in checked and not _REGISTRY[n].oracle
-    ]
-    ordered = {n: _REGISTRY[n] for n in front}
-    # Proven-and-unmodified tail: stalest proof first (ascending last-checked
-    # round, registration order as the tie-break), so with zero unproven
-    # backlog the driver's 50-name window re-confirms the OLDEST greens each
-    # round instead of freezing on the first 50 registered.
-    reg_index = {n: i for i, n in enumerate(names)}
-    tail = sorted(
-        (n for n in names if n not in ordered),
-        key=lambda n: (last_round.get(n, 0), reg_index[n]),
-    )
-    ordered.update((n, _REGISTRY[n]) for n in tail)
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
-
-
-_rotate_window()

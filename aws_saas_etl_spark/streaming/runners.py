@@ -41,8 +41,8 @@ _stage_cache: dict[tuple[str, ...], str] = {}
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage fixture events as a 3-file parquet directory (µs timestamps,
-    one file per micro-batch). Cached per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    one file per micro-batch). Cached per (session, abspath(sf_dir))."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     path = _stage_cache.get(key)
     if path and os.path.isdir(path):
         return path
@@ -452,9 +452,9 @@ def stream_custom_sink_ingest(spark, sf_dir: str) -> DataFrame:
 
 def _staged_embeddings_dir(spark, sf_dir: str) -> str:
     """Stage fixture embeddings as a multi-file parquet directory (one
-    file per micro-batch). Cached per (session, sf_dir) — shared by
-    every embedding-stream ingest rung."""
-    key = (spark.sparkContext.applicationId, sf_dir, "emb")
+    file per micro-batch). Cached per (session, abspath(sf_dir)) — shared
+    by every embedding-stream ingest rung."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), "emb")
     path = _stage_cache.get(key)
     if path and os.path.isdir(path):
         return path
@@ -556,8 +556,8 @@ def stream_bq_signature_ingest(spark, sf_dir: str) -> DataFrame:
 
 def _staged_documents_dir(spark, sf_dir: str) -> str:
     """Stage fixture documents as a multi-file parquet directory (one
-    file per micro-batch). Cached per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "docs")
+    file per micro-batch). Cached per (session, abspath(sf_dir))."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), "docs")
     path = _stage_cache.get(key)
     if path and os.path.isdir(path):
         return path

@@ -23,118 +23,54 @@ def test_every_query_has_registry_entry(spark):
     assert set(oracles).issubset(set(qs))
 
 
-def _unproven_names():
-    """Queries the rotation must front: failed, modified-since-proven, or
-    never driver-checked — computed from ALL CORRECTNESS_r*.json files on
-    disk (the same inputs ``registry._rotate_window`` uses), so the test
-    states the invariant rather than pinning any one round's snapshot."""
-    from aws_saas_etl_spark import registry
-
-    checked, failed, _last_round = registry._correctness_status()
-    proven_fp = registry._proven_fingerprints()
-    current_fp = registry.query_fingerprints()
-    modified = {
-        n
-        for n in checked
-        if n in proven_fp and proven_fp[n] != current_fp.get(n, proven_fp[n])
-    }
-    return checked, failed, modified
+_IMPORT_PROBE = """
+import json, os, sys
+import pandas, pyspark.sql
+opened = []
+sys.addaudithook(lambda event, args: event == "open" and opened.append(args[0]))
+from aws_saas_etl_spark import registry
+paths = [os.fsdecode(p) for p in opened if isinstance(p, (str, bytes))]
+print(json.dumps({"opened": paths, "names": list(registry.queries())}))
+"""
 
 
-def test_driver_window_rotation_invariant():
-    """The driver's correctness gate samples the FIRST 50 names of
-    queries(). Invariants (stable across rounds, unlike window contents):
-
-    1. every previously-failed query leads the order;
-    2. no proven-and-unmodified query precedes an unproven one;
-    3. when the unproven backlog fits in the window, all of it is inside
-       the first-50 prefix (nothing waits an extra round).
-    """
-    from aws_saas_etl_spark import registry
-
-    names = list(registry.queries().keys())
-    checked, failed, modified = _unproven_names()
-    unproven = {n for n in names if n in failed or n in modified or n not in checked}
-
-    assert set(names[: len(failed)]) == failed, "failed queries must lead the window"
-
-    first_proven = next(
-        (i for i, n in enumerate(names) if n not in unproven), len(names)
-    )
-    tail_unproven = [n for n in names[first_proven:] if n in unproven]
-    assert not tail_unproven, f"unproven queries behind proven ones: {tail_unproven}"
-
-    if len(unproven) <= 50:
-        window = set(names[:50])
-        missing = sorted(unproven - window)
-        assert not missing, f"unproven queries outside the 50-query window: {missing}"
-
-
-def test_proven_tail_rotates_stalest_first():
-    """Behind the unproven front, queries() must order proven queries by
-    ascending last-checked round (CORRECTNESS files), so once the backlog
-    is empty the driver's 50-name window re-confirms the OLDEST proofs
-    each round instead of freezing on registration order."""
-    from aws_saas_etl_spark import registry
-
-    names = list(registry.queries().keys())
-    checked, failed, last_round = registry._correctness_status()
-    _c, _f, modified = _unproven_names()
-    tail = [
-        n
-        for n in names
-        if n in checked and n not in failed and n not in modified
-    ]
-    rounds = [last_round.get(n, 0) for n in tail]
-    assert rounds == sorted(rounds), "proven tail not in stalest-first order"
-
-
-def test_fingerprint_covers_shared_helpers():
-    """A rewrite of a shared helper (e.g. the PPJoin prefix filter) must
-    change the fingerprints of the queries that use it — otherwise a
-    helper rewrite hides behind old proven stamps and never re-enters the
-    driver window."""
-    from aws_saas_etl_spark import registry
-    from aws_saas_etl_spark.operators import dedup
-
-    srcs = "\n".join(registry._transitive_sources(dedup.ngram_jaccard_pairs))
-    assert "def _prefix_candidates" in srcs
-    assert "def bounded_self_pairs" in srcs or "def _bounded_self_pairs" in srcs
-
-
-def test_no_query_stays_driver_invisible():
-    """Every query registered ≥2 rounds ago (QUERY_ROUNDS.json, maintained
-    by tools/update_fingerprints.py) must have a driver CORRECTNESS row by
-    now — or, if the backlog ever exceeded the 50-query window, be inside
-    the CURRENT window so it is checked this round."""
-    import glob
+def test_registry_import_does_no_work():
+    """Importing the registry only registers queries. In a fresh interpreter
+    (third-party imports done first) it opens nothing but module code and
+    files inside the package, and ``queries()`` keeps the order of the
+    ``register("…"`` calls in the source."""
     import json
     import os
     import re
+    import subprocess
+    import sys
 
-    from aws_saas_etl_spark import registry
+    from tests.conftest import REPO_ROOT
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    corr = glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    latest = max(
-        (int(m.group(1)) for p in corr if (m := re.search(r"_r0*(\d+)", p))),
-        default=0,
+    pkg = os.path.join(REPO_ROOT, "aws_saas_etl_spark")
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE],
+        cwd=REPO_ROOT,
+        env={**os.environ, "PYTHONPATH": REPO_ROOT},
+        capture_output=True,
+        text=True,
+        check=True,
     )
-    with open(os.path.join(repo, "QUERY_ROUNDS.json")) as f:
-        rounds = json.load(f)
+    probe = json.loads(out.stdout.splitlines()[-1])
 
-    checked, failed, _ = _unproven_names()
-    window = set(list(registry.queries().keys())[:50])
-    stale = sorted(
-        n
-        for n, first in rounds.items()
-        if n in registry.queries()
-        and first <= latest - 1
-        and n not in checked
-        and n not in failed
-        and n not in window
-    )
-    assert not stale, f"driver-invisible for ≥2 rounds and not queued: {stale}"
+    def allowed(path: str) -> bool:
+        path = os.path.abspath(path)
+        if path.startswith(pkg + os.sep):
+            return True
+        return path.endswith((".py", ".pyc", ".so")) and not path.startswith(
+            REPO_ROOT + os.sep
+        )
+
+    assert [p for p in probe["opened"] if not allowed(p)] == []
+
+    with open(os.path.join(pkg, "registry.py")) as f:
+        registered = re.findall(r'register\(\s*"([^"]+)"', f.read())
+    assert probe["names"] == registered
 
 
 def _scalar_column_offenders(spark, names) -> list[str]:

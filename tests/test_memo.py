@@ -101,3 +101,18 @@ def test_sizing_caches_are_registered_untraced():
     for expected in ("table_scans", "table_row_counts", "append_cut"):
         assert expected in by_name, expected
         assert by_name[expected].traced is False, expected
+
+
+def test_none_value_is_a_cache_hit(spark):
+    """A sizing scalar that is legitimately ``None`` (the percentile of an
+    empty table) is built once per session, not on every lookup."""
+    calls = []
+
+    def build():
+        calls.append(1)
+        return None
+
+    tag = ("test_none_value_is_a_cache_hit",)
+    assert memo.derived_scalar_cached(spark, tag, build) is None
+    assert memo.derived_scalar_cached(spark, tag, build) is None
+    assert calls == [1]

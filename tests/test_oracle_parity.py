@@ -50,9 +50,9 @@ def _query_names():
     return sorted(registry.queries().keys())
 
 
-# Always-on cross-family SMOKE subset (r14, VERDICT r13 #2): one-to-three
-# representatives per operator family, so the default (driver-window-sized)
-# run still differentially checks every family's plumbing end to end. The
+# Always-on cross-family SMOKE subset: a few representatives per operator
+# family (including every memo-backed family and every benchmark query), so
+# the default run still differentially checks each family end to end. The
 # exhaustive 241-query replay below is `slow` (opt-in) — it duplicates
 # tools/driver_sim.py, which the builder runs on the final tree anyway.
 SMOKE_QUERIES = [
@@ -78,16 +78,21 @@ SMOKE_QUERIES = [
     "ann_lsh_topk",
     "ann_ivf_topk",
     "ann_pq_adc_topk",
+    "ann_ivfpq_topk",
     "ann_bq_hamming_topk",
     "embedding_neardup_pairs",
     # text / LLM curation
     "doc_gopher_repetition",
     "doc_tfidf_top_terms",
     "corpus_bpe_tokenize",
+    "doc_crossdoc_duplication",
+    "doc_lexical_topk_pruned",
     # manifest / quality gates
     "training_manifest",
     "logreg_staleness_report",
     "manifest_shard_stats",
+    "training_manifest_full_pipeline",
+    "manifest_gateset_version_diff",
     # sampling, multimodal, io, graph, streaming
     "stratified_sample_stats",
     "multimodal_phash_buckets",

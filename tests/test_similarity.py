@@ -1220,3 +1220,20 @@ def test_truth_topk_cache_key_is_canonical_path(spark):
     assert [k for k in _TRUTH_CACHE if (k[0], os.path.abspath(k[1])) == ours] == [
         (*ours, TOP_K)
     ]
+
+
+def test_ivf_centroids_cache_key_is_canonical_path(spark):
+    """``sf_dir`` with and without a trailing slash shares one fitted
+    centroid table, and so does its ``::base`` variant."""
+    from aws_saas_etl_spark.catalog import ensure_parallelism, table_row_count
+    from aws_saas_etl_spark.operators.similarity import (
+        _ivf_centroids_cached,
+        ivf_cells_for,
+    )
+
+    emb = ensure_parallelism(load_tables(spark, SF_SMOKE).embeddings)
+    n_cells = ivf_cells_for(table_row_count(spark, SF_SMOKE, "embeddings"))
+    for suffix in ("", "::base"):
+        first = _ivf_centroids_cached(spark, SF_SMOKE + suffix, emb, n_cells)
+        again = _ivf_centroids_cached(spark, SF_SMOKE + "/" + suffix, emb, n_cells)
+        assert again is first, suffix

@@ -801,3 +801,11 @@ def test_stream_manifest_delta_ingest_matches_merge_keep_set(spark):
         .collect()
     )
     assert streamed == batch and streamed
+
+
+def test_stream_staging_cache_key_is_canonical_path(spark):
+    """``sf_dir`` with and without a trailing slash stages events once."""
+    from aws_saas_etl_spark.streaming.runners import _staged_events_dir
+
+    first = _staged_events_dir(spark, SF)
+    assert _staged_events_dir(spark, SF + "/") == first

@@ -4,7 +4,8 @@
 Usage: python tools/capture_plans.py <out_dir> <suffix> <query> [<query> ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query — the before/after
-plan evidence the optimization rounds commit under plans/r{N}/. Plans are
+plan evidence the optimization write-ups cite (plans/r{N}/, not tracked:
+regenerate rather than commit). Plans are
 captured COLD (session memos cleared before each query) so memo-backed
 queries show their full chain, matching tools/plan_audit.py conventions.
 """
